@@ -1,11 +1,7 @@
 """Spark-vs-DuckDB parity for the pre-built gate candidates — the
 SAME canonical compare the registered parity sweep uses, run against
-queries that are deliberately NOT in the registry yet (the rotation
-throttle in plans/queries.py admits at most ~2 promotions per round).
-When a candidate is promoted, it arrives with this evidence standing.
-r15 promoted duplicated_spans + gopher_flags out of this file into
-the registry; r16 promoted dsir_resample + audio_fingerprint_pairs;
-the remaining two entries wait for the r17 window."""
+queries that are deliberately NOT in the registry. When a candidate is
+registered, it arrives with this evidence standing."""
 
 from __future__ import annotations
 
@@ -13,19 +9,18 @@ import pytest
 
 from tests.conftest import SF_DIR
 from tests.test_parity import _canon
-from w4h_integrated_toolkit_spark.plans.queries import R17_CANDIDATES
+from w4h_integrated_toolkit_spark.plans.queries import CANDIDATES
 
-CASES = [(n, fn, sql) for n, (fn, sql) in R17_CANDIDATES.items()]
+CASES = [(n, fn, sql) for n, (fn, sql) in CANDIDATES.items()]
 
 
 def test_candidates_stay_out_of_the_registry():
     from w4h_integrated_toolkit_spark.plans import QUERIES
 
-    overlap = set(R17_CANDIDATES) & set(QUERIES)
+    overlap = set(CANDIDATES) & set(QUERIES)
     assert not overlap, (
-        f"R17 candidates {overlap} leaked into the registry — the r16 "
-        "window admits only the 2 planned promotions; promote the rest "
-        "at r17 per the plan"
+        f"candidates {overlap} are also registered — registering one "
+        "means moving it from CANDIDATES into QUERIES"
     )
 
 

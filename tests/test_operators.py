@@ -3598,7 +3598,9 @@ def test_dedup_keep_best_join_then_score_shape(spark):
     DRIVER-PATH DEPENDENCY (r16 ADVICE): these shape assertions hold
     only because connected_components takes the driver union-find path
     at this fixture size (pairs <= driver_threshold=100k) and returns a
-    lineage-truncated local relation the builder may broadcast-hint. A
+    lineage-truncated local relation that it broadcast-hints itself. The
+    BroadcastExchange must carry exactly that (node, component) side:
+    without the hint its unknown size estimate plans a SortMergeJoin. A
     larger fixture would flip to the distributed path, re-introduce the
     widened corpus scan under the (now un-hinted) join, and fail this
     test WITHOUT any code regression — the pair-count assertion below
@@ -3629,6 +3631,10 @@ def test_dedup_keep_best_join_then_score_shape(spark):
     assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 1
     assert "SortMergeJoin" not in plan
     assert "BroadcastHashJoin" in plan
+    assert re.search(
+        r"\(\d+\) BroadcastExchange\nInput \[2\]: \[node#\d+L, component#\d+L\]",
+        plan,
+    ), plan
     assert "RoundRobinPartitioning" not in plan
 
 
@@ -6287,6 +6293,12 @@ def test_gopher_flags_hand_model_stats(spark):
         "word_count",
     ]
     assert r["passes"] is False
+    # the rules are built as SQL text: a column name with a space is quoted
+    spaced = df.withColumnRenamed("text", "body text")
+    assert gopher_quality_flags(spaced, text="body text").collect()[0] == r
+    # a non-finite threshold fails here, not as `nanD` deep in the parser
+    with pytest.raises(ValueError, match="non-finite"):
+        gopher_quality_flags(df, max_dup_line_frac=float("nan"))
 
 
 def test_gopher_flags_clean_doc_passes(spark):

@@ -1010,6 +1010,12 @@ def connected_components(
     on the driver — microseconds of CPU instead of ~3 Spark jobs per
     propagation round. The distributed path remains for genuinely large
     graphs (set ``driver_threshold=0`` to force it, as the tests do).
+
+    The driver-path result is broadcast-hinted: it holds at most
+    ``driver_threshold`` rows, but a ``createDataFrame`` relation plans
+    with an unknown (maximal) size estimate, so without the hint every
+    join against it would be a sort-merge join. The distributed result's
+    size is unknown and is left to the planner.
     """
     rows = (
         pairs.select(id_a, id_b).take(driver_threshold + 1)
@@ -1039,16 +1045,9 @@ def connected_components(
             if m is None or node < m:
                 comp_min[root] = node
         out = [(node, comp_min[find(node)]) for node in parent]
-        result = pairs.sparkSession.createDataFrame(
-            out, "node long, component long"
+        return F.broadcast(
+            pairs.sparkSession.createDataFrame(out, "node long, component long")
         )
-        # expose which path produced the result (the skipped_groups
-        # accumulator pattern): a driver-path component relation is
-        # provably <= driver_threshold rows and safe to broadcast-hint;
-        # the distributed relation's size is unknown and hinting it
-        # forces an arbitrarily large build side (r16 ADVICE)
-        result.driver_path = True
-        return result
     edges = (
         pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
         .union(pairs.select(F.col(id_b).alias("u"), F.col(id_a).alias("v")))
@@ -1090,7 +1089,6 @@ def connected_components(
         labels = new_labels
         if changed == 0:
             break
-    labels.driver_path = False
     return labels
 
 

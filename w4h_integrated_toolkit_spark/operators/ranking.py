@@ -359,6 +359,14 @@ def pmi_pairs(
     vocab-intersection + pair explode, ONE pair aggregate, broadcast df
     joins for d_a/d_b, N as a 1-row broadcast. Ranking by integer
     (d_ab DESC, a, b) — deterministic without float ordering.
+
+    Eager build: calling this function runs Spark jobs before it returns.
+    The vocab fit (the corpus token-df aggregate and its top
+    ``vocab_size``) is materialized by an eager ``localCheckpoint``, and
+    its tokens are ``collect()``-ed to the driver into the literal array
+    the per-doc intersection reads. That array holds at most
+    ``vocab_size`` strings, so the plan grows with ``vocab_size``, not
+    with the corpus.
     """
     toks = df.select(
         id_col,

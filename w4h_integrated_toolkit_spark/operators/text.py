@@ -7,6 +7,8 @@ Designed for a ``documents(doc_id, text, ...)`` table.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -521,9 +523,11 @@ def gopher_quality_flags(
     raising like 1-based ``element_at(..., 0)`` would).
 
     DuckDB-oracle-expressible throughout (string_split + list_sort +
-    list slicing replicate the predecessor compare), so this can take a
-    registry entry when the rotation window has a slot (r15 candidate,
-    alongside duplicated_spans).
+    list slicing replicate the predecessor compare); the gopher_flags
+    registry entry gates it.
+
+    The rules are built as SQL text: ``text`` is backtick-quoted, and a
+    non-finite float threshold raises ``ValueError``.
     """
     # r17 construction pass (the r16 simhash/ANN/minhash precedent): the
     # whole zero-shuffle projection assembles as PARSED SQL expression
@@ -535,9 +539,10 @@ def gopher_quality_flags(
     # same places); output equality and executed-plan shape stay pinned
     # by the hand-model/attribution/plan tests plus the randomized
     # text_gates stress section.
+    text_col = "`" + text.replace("`", "``") + "`"
     t = (
         "regexp_replace(regexp_replace("
-        f"{text}, '^\\\\s+', ''), '\\\\s+$', '')"
+        f"{text_col}, '^\\\\s+', ''), '\\\\s+$', '')"
     )
     words = f"filter(split({t}, '\\\\s+'), x_ -> x_ != '')"
     n_words = (
@@ -562,7 +567,7 @@ def gopher_quality_flags(
     # line rules over non-empty fully-trimmed lines (tab-only lines are
     # blank, not one-char lines — the _ws_trim regexes, not trim())
     lines = (
-        f"filter(transform(split({text}, '\\\\n'), "
+        f"filter(transform(split({text_col}, '\\\\n'), "
         "l_ -> regexp_replace(regexp_replace(l_, '^\\\\s+', ''), "
         "'\\\\s+$', '')), x_ -> x_ != '')"
     )
@@ -628,28 +633,36 @@ def gopher_quality_flags(
         F.expr(f"{dup_line_frac} AS dup_line_frac"),
         F.expr(f"{dup_char_frac} AS dup_line_char_frac"),
     )
+
+    def lit(x: float) -> str:
+        # a double literal; nan/inf would render as `nanD`/`infD`, which
+        # the SQL parser rejects far from the caller's mistake
+        if not math.isfinite(x):
+            raise ValueError(f"gopher_quality_flags: non-finite threshold {x!r}")
+        return f"{float(x)!r}D"
+
     rules = [
         ("word_count", f"n_words BETWEEN {min_words} AND {max_words}"),
         (
             "mean_word_len",
-            f"mean_word_len BETWEEN {min_mean_word_len!r}D "
-            f"AND {max_mean_word_len!r}D",
+            f"mean_word_len BETWEEN {lit(min_mean_word_len)} "
+            f"AND {lit(max_mean_word_len)}",
         ),
         (
             "symbol_word_ratio",
-            f"symbol_word_ratio <= {max_symbol_word_ratio!r}D",
+            f"symbol_word_ratio <= {lit(max_symbol_word_ratio)}",
         ),
-        ("bullet_lines", f"bullet_line_frac <= {max_bullet_line_frac!r}D"),
+        ("bullet_lines", f"bullet_line_frac <= {lit(max_bullet_line_frac)}"),
         (
             "ellipsis_lines",
-            f"ellipsis_line_frac <= {max_ellipsis_line_frac!r}D",
+            f"ellipsis_line_frac <= {lit(max_ellipsis_line_frac)}",
         ),
-        ("alpha_words", f"alpha_word_frac >= {min_alpha_word_frac!r}D"),
+        ("alpha_words", f"alpha_word_frac >= {lit(min_alpha_word_frac)}"),
         ("stopwords", f"stopword_hits >= {min_stopword_hits}"),
-        ("dup_lines", f"dup_line_frac <= {max_dup_line_frac!r}D"),
+        ("dup_lines", f"dup_line_frac <= {lit(max_dup_line_frac)}"),
         (
             "dup_line_chars",
-            f"dup_line_char_frac <= {max_dup_line_char_frac!r}D",
+            f"dup_line_char_frac <= {lit(max_dup_line_char_frac)}",
         ),
     ]
     reasons = ", ".join(
